@@ -10,12 +10,16 @@ Engine:
   disk sized to the radius, equi-join on cell, exact distance refine) — at
   scale this prunes to O(pairs-in-range) instead of O(n*m). Without a radius
   it degrades to the reference's full cross join (exact parity mode).
-- ``knn``: cell-ring expansion with exact re-rank (SURVEY §7 hard-part 5):
-  round 1 joins each query point to candidates in its 3x3 cell disk and
-  keeps points whose k-th candidate distance is provably final (<= the
-  distance to the disk boundary); the remainder — typically a tiny fraction —
-  falls back to a cross join. Ties break on (distance, to_id) so results are
-  deterministic and match the DuckDB oracle's ORDER BY.
+- ``knn``: cell-ring expansion with exact re-rank (SURVEY §7 hard-part 5),
+  one lazy fold over the rings 1, 4 and 16. Each round joins the still
+  unresolved query points to the candidates in their (2·ring+1)² cell disk
+  (the same band join ``near_table`` uses) and keeps the points whose k-th
+  candidate distance is provably final: no farther than the point's
+  distance to the disk's boundary, so no point outside the disk can beat
+  it. The kept points leave the fold; whatever survives ring 16 (empty or
+  edge regions, typically a handful of points) falls back to an exact
+  cross join. Ties break on (distance, to_id) so results are deterministic
+  and match the DuckDB oracle's ORDER BY.
 
 The pre-filter callback becomes a plain ``df.filter`` on either side
 (SURVEY §2.9), pushed below the join by Catalyst.
@@ -27,12 +31,31 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
-from .spatial_join import cell_expr
 from .util import track_persisted
 
 
 def _dist(x1, y1, x2, y2):
     return F.sqrt((x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2))
+
+
+def _disk_pairs(a: DataFrame, b: DataFrame, kx: int, ky: int, res: int) -> DataFrame:
+    """Cell-disk band join: every row of `a` (ax, ay) meets every row of `b`
+    (bx, by) whose level-`res` cell lies in the (2kx+1)x(2ky+1) disk around
+    the `a` row's own cell (cx, cy), by an equi-join on the cell (jx, jy)."""
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    ac = a.select(
+        "*",
+        F.floor((F.col("ax") + 180.0) / w).alias("cx"),
+        F.floor((F.col("ay") + 90.0) / h).alias("cy"),
+    )
+    ac = ac.select("*", F.explode(F.sequence(F.lit(-kx), F.lit(kx))).alias("dx"))
+    ac = ac.select("*", F.explode(F.sequence(F.lit(-ky), F.lit(ky))).alias("dy"))
+    ac = ac.withColumn("jx", F.col("cx") + F.col("dx")).withColumn("jy", F.col("cy") + F.col("dy"))
+    bc = b.withColumn("jx", F.floor((F.col("bx") + 180.0) / w)).withColumn(
+        "jy", F.floor((F.col("by") + 90.0) / h)
+    )
+    return ac.join(bc, ["jx", "jy"])
 
 
 def near_table(
@@ -66,19 +89,8 @@ def near_table(
         pairs = a.crossJoin(b)
     else:
         n = 1 << res
-        w, h = 360.0 / n, 180.0 / n
-        kx, ky = int(radius / w) + 1, int(radius / h) + 1
-        dx = F.explode(F.sequence(F.lit(-kx), F.lit(kx))).alias("dx")
-        ac = a.withColumn("cx", F.floor((F.col("ax") + 180.0) / w)).withColumn(
-            "cy", F.floor((F.col("ay") + 90.0) / h)
-        )
-        ac = ac.select("*", dx)
-        ac = ac.select("*", F.explode(F.sequence(F.lit(-ky), F.lit(ky))).alias("dy"))
-        ac = ac.withColumn("jx", F.col("cx") + F.col("dx")).withColumn("jy", F.col("cy") + F.col("dy"))
-        bc = b.withColumn("jx", F.floor((F.col("bx") + 180.0) / w)).withColumn(
-            "jy", F.floor((F.col("by") + 90.0) / h)
-        )
-        pairs = ac.join(bc, ["jx", "jy"])
+        kx, ky = int(radius / (360.0 / n)) + 1, int(radius / (180.0 / n)) + 1
+        pairs = _disk_pairs(a, b, kx, ky, res)
     out = pairs.withColumn("distance", _dist(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")))
     if radius is not None:
         out = out.filter(F.col("distance") <= F.lit(radius))
@@ -156,9 +168,12 @@ def knn(
 ) -> DataFrame:
     """Self k-nearest-neighbours: (from_id, rank, to_id, distance).
 
-    Round 1: 3x3 cell-disk candidates; keep query points whose k-th distance
-    is <= their distance to the disk boundary (no farther point can beat it).
-    Round 2: cross-join fallback for the rest.
+    One lazy plan, no Spark job at build time. Rings 1, 4 and 16 in turn:
+    the unresolved points join the candidates of their (2·ring+1)² cell
+    disk, rank them on (distance, to_id), and a point is kept when it has
+    k candidates and its k-th distance is <= its distance to the disk's
+    boundary (no point outside the disk can be nearer). Kept points leave
+    the fold; the points left after ring 16 take the exact cross join.
     """
     n = 1 << res
     w, h = 360.0 / n, 180.0 / n
@@ -168,114 +183,52 @@ def knn(
     b = points.select(
         F.col("point_id").alias("to_id"), F.col("x").alias("bx"), F.col("y").alias("by")
     )
-
-    ac = a.withColumn("cx", F.floor((F.col("ax") + 180.0) / w)).withColumn(
-        "cy", F.floor((F.col("ay") + 90.0) / h)
-    )
-    ac = ac.select("*", F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dx"))
-    ac = ac.select("*", F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dy"))
-    ac = ac.withColumn("jx", F.col("cx") + F.col("dx")).withColumn("jy", F.col("cy") + F.col("dy"))
-    bc = b.withColumn("jx", F.floor((F.col("bx") + 180.0) / w)).withColumn(
-        "jy", F.floor((F.col("by") + 90.0) / h)
-    )
-    cand = (
-        ac.join(bc, ["jx", "jy"])
-        .filter(F.col("from_id") != F.col("to_id"))
-        .withColumn("distance", _dist(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")))
-        .select("from_id", "ax", "ay", "to_id", "distance")
-    )
     win = Window.partitionBy("from_id").orderBy("distance", "to_id")
-    # persist: ranked (<= k rows per query point — output-sized, spillable)
-    # feeds `done`, the resolution test, AND the rest chain; without it the
-    # candidate join recomputes for every ring probe and the fallback.
-    # Persisted handles ride the result — util.release(out) frees them.
-    handles = []
-    ranked = (
-        cand.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .persist()
-    )
-    handles.append(ranked)
-
-    # distance from the query point to its 3x3-disk boundary: the safety bound
-    cx = F.floor((F.col("ax") + 180.0) / w)
-    cy = F.floor((F.col("ay") + 90.0) / h)
-    bound = F.least(
-        F.col("ax") - ((cx - 1) * w - 180.0),
-        ((cx + 2) * w - 180.0) - F.col("ax"),
-        F.col("ay") - ((cy - 1) * h - 90.0),
-        ((cy + 2) * h - 90.0) - F.col("ay"),
-    )
-    per_from = ranked.groupBy("from_id", "ax", "ay").agg(
-        F.count("*").alias("n_cand"), F.max("distance").alias("kth")
-    )
-    ok_ids = per_from.filter((F.col("n_cand") >= k) & (F.col("kth") <= bound)).select("from_id")
-    done = ranked.join(F.broadcast(ok_ids), "from_id", "left_semi").select(
-        "from_id", "rank", "to_id", "distance"
-    )
-
-    # ring expansion: unresolved points retry with a wider cell disk before
-    # the exact brute-force tail (SURVEY §7 hard-part 5: expand until the
-    # k-th candidate distance clears the disk's minimum exit distance)
-    rest = a.join(F.broadcast(ok_ids), "from_id", "left_anti").persist()
-    results = [done]
-    for ring in (4, 16):
-        if rest.isEmpty():
-            break
-        rc = rest.withColumn("cx", F.floor((F.col("ax") + 180.0) / w)).withColumn(
-            "cy", F.floor((F.col("ay") + 90.0) / h)
-        )
-        rc = rc.select("*", F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("dx"))
-        rc = rc.select("*", F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("dy"))
-        rc = rc.withColumn("jx", F.col("cx") + F.col("dx")).withColumn(
-            "jy", F.col("cy") + F.col("dy")
-        )
-        rcand = (
-            rc.join(bc, ["jx", "jy"])
+    cols = ["from_id", "rank", "to_id", "distance"]
+    rest, results, handles = a, [], []
+    for ring in (1, 4, 16):
+        ranked = (
+            _disk_pairs(rest, b, ring, ring, res)
             .filter(F.col("from_id") != F.col("to_id"))
-            .withColumn("distance", _dist(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")))
-            .select("from_id", "ax", "ay", "to_id", "distance")
-        )
-        rranked = (
-            rcand.withColumn("rank", F.row_number().over(win))
+            .select(
+                "from_id", "ax", "ay", "cx", "cy", "to_id",
+                _dist(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")).alias("distance"),
+            )
+            .withColumn("rank", F.row_number().over(win))
             .filter(F.col("rank") <= k)
+            # the k-th distance, NULL (never kept) with fewer than k candidates
+            .withColumn(
+                "kth",
+                F.max(F.when(F.col("rank") == k, F.col("distance"))).over(
+                    Window.partitionBy("from_id")
+                ),
+            )
+            # <= k rows per point, read by the kept rows, the resolved ids
+            # and every later round's `rest`; cached so repeated actions on
+            # the result do not rerun the fold (util.release(out) frees it)
             .persist()
         )
-        handles.append(rranked)
-        rbound = F.least(
-            F.col("ax") - ((cx - ring) * w - 180.0),
-            ((cx + ring + 1) * w - 180.0) - F.col("ax"),
-            F.col("ay") - ((cy - ring) * h - 90.0),
-            ((cy + ring + 1) * h - 90.0) - F.col("ay"),
+        handles.append(ranked)
+        bound = F.least(
+            F.col("ax") - ((F.col("cx") - ring) * w - 180.0),
+            ((F.col("cx") + ring + 1) * w - 180.0) - F.col("ax"),
+            F.col("ay") - ((F.col("cy") - ring) * h - 90.0),
+            ((F.col("cy") + ring + 1) * h - 90.0) - F.col("ay"),
         )
-        rper = rranked.groupBy("from_id", "ax", "ay").agg(
-            F.count("*").alias("n_cand"), F.max("distance").alias("kth")
-        )
-        rok = rper.filter((F.col("n_cand") >= k) & (F.col("kth") <= rbound)).select("from_id")
-        results.append(
-            rranked.join(F.broadcast(rok), "from_id", "left_semi").select(
-                "from_id", "rank", "to_id", "distance"
-            )
-        )
-        # unpersist the superseded rest (bounds the CacheManager footprint
-        # across rings; Spark recomputes transparently if a later action
-        # still needs the evicted lineage)
-        prev_rest = rest
-        rest = rest.join(F.broadcast(rok), "from_id", "left_anti").persist()
-        prev_rest.unpersist()
+        kept = ranked.filter(F.col("kth") <= bound)
+        results.append(kept.select(*cols))
+        ok = kept.filter(F.col("rank") == 1).select("from_id")
+        rest = rest.join(F.broadcast(ok), "from_id", "left_anti")
 
-    # exact brute-force tail for whatever survives all rings (vanishingly
-    # few points — empty/edge regions)
-    fb = (
+    # exact brute-force tail for whatever survives all rings
+    results.append(
         rest.crossJoin(b)
         .filter(F.col("from_id") != F.col("to_id"))
         .withColumn("distance", _dist(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")))
         .withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= k)
-        .select("from_id", "rank", "to_id", "distance")
+        .select(*cols)
     )
-    results.append(fb)
-    handles.append(rest)
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)

@@ -82,8 +82,9 @@ def dwell_points(
     expressible as a running composition: a point opens a new dwell iff its
     distance to the CURRENT anchor exceeds radius. The whole segmentation
     is ONE slim shuffle (track_id + seq + two doubles, map-side combined
-    into per-track arrays) and one LINEAR in-array fold per track that
-    appends/extends the dwell list directly — replacing the former
+    into per-track arrays) and one in-array fold per track that
+    appends/extends the dwell list directly, O(points x dwells) per track
+    since each step rebuilds the dwell array — replacing the former
     per-POINT prefix window (O(points^2) interpreted fold per track plus a
     second exchange for the dwell groupBy). The per-step distance runs the
     identical IEEE expression against the identical running anchor, so the
@@ -103,11 +104,11 @@ def dwell_points(
 
     # fold the ordered track: dwell list state; a point further than
     # `radius` from the LAST dwell's anchor extends the list, otherwise it
-    # increments the last dwell's count. element_at(-1) of the empty list
-    # is NULL, so `started | far` opens the first dwell exactly like the
-    # former n==0 state.
+    # increments the last dwell's count. try_element_at(-1) of the empty
+    # list is NULL, also under ANSI mode, so `started | far` opens the
+    # first dwell exactly like the former n==0 state.
     def fold(acc, p):
-        last = F.element_at(acc, -1)
+        last = F.try_element_at(acc, F.lit(-1))
         far = F.sqrt(
             (p["x"] - last["ax"]) * (p["x"] - last["ax"])
             + (p["y"] - last["ay"]) * (p["y"] - last["ay"])

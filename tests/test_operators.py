@@ -206,10 +206,61 @@ class TestTileAssignZonal:
             assert int(wide.loc[zid, "count_total"]) == o["count_total"]
 
 
+@pytest.fixture(scope="module")
+def ring_points(spark):
+    """Points shaped like the benchmark's kNN input, small enough for the
+    numpy oracle, where every round of knn's ring expansion resolves some
+    point: uniform points and a tight cluster, exact duplicates (distance
+    ties), a remote group of six (wide rings) and one lone point that only
+    the brute-force tail resolves."""
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    x = np.concatenate([rng.uniform(-120.0, -80.0, 40), -100.0 + rng.normal(0, 0.01, 20)])
+    y = np.concatenate([rng.uniform(30.0, 45.0, 40), 37.0 + rng.normal(0, 0.01, 20)])
+    dup = rng.choice(len(x), 6, replace=False)
+    x = np.concatenate([x, x[dup], rng.uniform(-72.0, -60.0, 6), [-27.0]])
+    y = np.concatenate([y, y[dup], rng.uniform(0.0, 12.0, 6), [-57.0]])
+    return spark.createDataFrame(pd.DataFrame(dict(point_id=np.arange(len(x)), x=x, y=y)))
+
+
+def _knn_round_counts(xy, k, res=7):
+    """Points resolved by knn's rings 1, 4, 16 and by the brute-force tail."""
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    x, y = xy[:, 0], xy[:, 1]
+    cx, cy = np.floor((x + 180.0) / w), np.floor((y + 90.0) / h)
+    rest, counts = np.arange(len(x)), []
+    for ring in (1, 4, 16):
+        q = rest
+        near = (np.abs(cx[None, :] - cx[q, None]) <= ring) & (np.abs(cy[None, :] - cy[q, None]) <= ring)
+        near[np.arange(len(q)), q] = False
+        d = np.sort(np.where(near, np.hypot(x[None, :] - x[q, None], y[None, :] - y[q, None]), np.inf), axis=1)
+        bound = np.minimum.reduce([
+            x[q] - ((cx[q] - ring) * w - 180.0), ((cx[q] + ring + 1) * w - 180.0) - x[q],
+            y[q] - ((cy[q] - ring) * h - 90.0), ((cy[q] + ring + 1) * h - 90.0) - y[q],
+        ])
+        ok = d[:, k - 1] <= bound
+        counts.append(int(ok.sum()))
+        rest = q[~ok]
+    return counts + [len(rest)]
+
+
 class TestKnnNear:
-    def test_knn_matches_bruteforce(self, spark, near_points):
-        pts = near_points.toPandas()
+    # (input, how many of rings 1/4/16 + tail it reaches): the synth
+    # near_points resolve within rings 1 and 4; ring_points reach them all
+    @pytest.mark.parametrize(
+        "table,rounds", [("near_points", 2), ("ring_points", 4)], ids=["near_points", "ring_points"]
+    )
+    def test_knn_matches_bruteforce(self, spark, request, table, rounds):
+        points = request.getfixturevalue(table)
+        tracker = spark.sparkContext.statusTracker()
+        before = len(tracker.getJobIdsForGroup(None) or [])
+        out = knn(spark, points, k=5)
+        assert len(tracker.getJobIdsForGroup(None) or []) == before, "knn() ran jobs before returning"
+        pts = points.toPandas()
         xy = pts[["x", "y"]].to_numpy()
+        assert all(_knn_round_counts(xy, 5)[:rounds])
         d = np.sqrt(((xy[:, None, :] - xy[None, :, :]) ** 2).sum(axis=2))
         np.fill_diagonal(d, np.inf)
         oracle = set()
@@ -218,10 +269,7 @@ class TestKnnNear:
             order = sorted(range(len(pts)), key=lambda j: (d[i, j], ids[j]))[:5]
             for rank, j in enumerate(order, 1):
                 oracle.add((int(ids[i]), rank, int(ids[j])))
-        got = {
-            (r.from_id, r["rank"], r.to_id)
-            for r in knn(spark, near_points, k=5).collect()
-        }
+        got = {(r.from_id, r["rank"], r.to_id) for r in out.collect()}
         assert got == oracle
 
     def test_near_table_radius(self, spark, near_points):
