@@ -75,7 +75,7 @@ _SPREAD_TABLES = {"documents", "embeddings"}
 def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
     if table in _SPREAD_TABLES:
-        from gdal_common_python_spark.operators.dedup import _spread
+        from gdal_common_python_spark.operators.util import _spread
 
         df = _spread(df)
     return df
@@ -832,7 +832,7 @@ def q_compact_cells(spark, sf_dir):
     res 9 (native codegen polyfill) -> distinct cells -> complete
     4-sibling groups promoted level-by-level down to res 5. All integer
     shift/mod codegen; work shrinks 4x per level."""
-    from gdal_common_python_spark.operators import layout as layout_ops
+    from gdal_common_python_spark.operators import cells, layout as layout_ops
 
     z = _synth(spark, sf_dir, "zones").select(
         F.col("bbox4326.xmin").alias("xmin"), F.col("bbox4326.ymin").alias("ymin"),
@@ -840,7 +840,7 @@ def q_compact_cells(spark, sf_dir):
     )
     cov = layout_ops.cover_bbox_cells(z, res=9)
     comp = layout_ops.compact_cells(cov, from_res=9, to_res=5)
-    return comp.select(F.shiftright("cell", 58).alias("res"), "cell")
+    return comp.select(cells.unpack(F.col("cell"))[0].alias("res"), "cell")
 
 
 def q_uncompact_cells(spark, sf_dir):
@@ -2323,7 +2323,7 @@ _POINTS = f"read_parquet('{S01}/near_points.parquet')"
 _SQL_CSV_WKT_ROUNDTRIP = f"SELECT point_id, tag, x, y FROM {_POINTS}"
 
 
-def _sql_grid_ixy_named(res: int) -> str:
+def _sql_grid_ixy(res: int) -> str:
     n = 1 << res
     return (
         f"CAST(least(greatest(floor((px + 180.0) / {360.0 / n!r}), 0), {n - 1}) AS BIGINT) AS ix,"
@@ -2346,7 +2346,7 @@ WITH pts AS (
 ),
 t AS (
   SELECT (1600000000 + (CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 9, 8) AS BIGINT) % 180)) AS epoch,
-         {_sql_grid_ixy_named(7)}
+         {_sql_grid_ixy(7)}
   FROM pts
 )
 SELECT CAST((epoch // 60) * 60 AS BIGINT) AS win_start,
@@ -3611,14 +3611,6 @@ from gdal_common_python_spark.operators.spatial_join import (  # noqa: E402
 
 _SQL_ZONE_STRATIFIED_SAMPLE = _zss_sql(_SQL_SPATIAL_JOIN_PIP, per_zone=25)
 _SQL_ZONE_KEYWORDS = _zk_sql(_SQL_SPATIAL_JOIN_PIP, _DOCS, top_k=5)
-
-
-def _sql_grid_ixy(res: int) -> str:
-    n = 1 << res
-    return (
-        f"CAST(least(greatest(floor((px + 180.0) / {360.0 / n!r}), 0), {n - 1}) AS BIGINT) AS ix,"
-        f" CAST(least(greatest(floor((py + 90.0) / {180.0 / n!r}), 0), {n - 1}) AS BIGINT) AS iy"
-    )
 
 
 _ZRES = 12

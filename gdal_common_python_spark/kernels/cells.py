@@ -21,8 +21,9 @@ from __future__ import annotations
 import numpy as np
 
 RES_MIN, RES_MAX = 0, 29
-_RES_SHIFT, _IX_SHIFT = 58, 29
-_IDX_MASK = (1 << 29) - 1
+RES_SHIFT, IX_SHIFT = 58, 29
+_IDX_MASK = (1 << IX_SHIFT) - 1
+ORIGIN = (180.0, 90.0)  # lon, lat offset of the grid's south-west corner
 
 
 def cell_size(res: int) -> tuple[float, float]:
@@ -30,21 +31,23 @@ def cell_size(res: int) -> tuple[float, float]:
     return 360.0 / (1 << res), 180.0 / (1 << res)
 
 
+def _index(v, res: int, axis: int) -> np.ndarray:
+    """Clamped grid index of lon (axis 0) / lat (axis 1) values at `res`."""
+    v = np.asarray(v, dtype=np.float64)
+    i = np.floor((v + ORIGIN[axis]) / cell_size(res)[axis])
+    return np.clip(i, 0, (1 << res) - 1).astype(np.int64)
+
+
 def encode(lon, lat, res: int) -> np.ndarray:
     """Vectorized lon/lat -> int64 cell id at resolution `res`."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    n = 1 << res
-    ix = np.clip(np.floor((lon + 180.0) / (360.0 / n)), 0, n - 1).astype(np.int64)
-    iy = np.clip(np.floor((lat + 90.0) / (180.0 / n)), 0, n - 1).astype(np.int64)
-    return (np.int64(res) << _RES_SHIFT) | (ix << _IX_SHIFT) | iy
+    return pack(res, _index(lon, res, 0), _index(lat, res, 1))
 
 
 def decode(cell: np.ndarray):
     """int64 cell id -> (res, ix, iy)."""
     cell = np.asarray(cell, dtype=np.int64)
-    res = (cell >> _RES_SHIFT).astype(np.int64)
-    ix = (cell >> _IX_SHIFT) & _IDX_MASK
+    res = (cell >> RES_SHIFT).astype(np.int64)
+    ix = (cell >> IX_SHIFT) & _IDX_MASK
     iy = cell & _IDX_MASK
     return res, ix, iy
 
@@ -54,8 +57,8 @@ def parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
     res, ix, iy = decode(cell)
     shift = res - parent_res
     return (
-        (np.int64(parent_res) << _RES_SHIFT)
-        | ((ix >> shift) << _IX_SHIFT)
+        (np.int64(parent_res) << RES_SHIFT)
+        | ((ix >> shift) << IX_SHIFT)
         | (iy >> shift)
     )
 
@@ -63,20 +66,14 @@ def parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
 def pack(res: int, ix, iy) -> np.ndarray:
     ix = np.asarray(ix, dtype=np.int64)
     iy = np.asarray(iy, dtype=np.int64)
-    return (np.int64(res) << _RES_SHIFT) | (ix << _IX_SHIFT) | iy
+    return (np.int64(res) << RES_SHIFT) | (ix << IX_SHIFT) | iy
 
 
 def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float, res: int) -> np.ndarray:
     """All cells at `res` whose rectangle intersects the bbox (the polygon
     covering used by the cell-partitioned spatial join, SURVEY §2.3 J2)."""
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
-    ix0 = int(np.clip(np.floor((xmin + 180.0) / w), 0, n - 1))
-    ix1 = int(np.clip(np.floor((xmax + 180.0) / w), 0, n - 1))
-    iy0 = int(np.clip(np.floor((ymin + 90.0) / h), 0, n - 1))
-    iy1 = int(np.clip(np.floor((ymax + 90.0) / h), 0, n - 1))
-    ixs = np.arange(ix0, ix1 + 1, dtype=np.int64)
-    iys = np.arange(iy0, iy1 + 1, dtype=np.int64)
+    ixs = np.arange(_index(xmin, res, 0), _index(xmax, res, 0) + 1, dtype=np.int64)
+    iys = np.arange(_index(ymin, res, 1), _index(ymax, res, 1) + 1, dtype=np.int64)
     gx, gy = np.meshgrid(ixs, iys, indexing="ij")
     return pack(res, gx.ravel(), gy.ravel())
 

@@ -67,7 +67,7 @@ def decontaminate(
     # array_distinct(transform(...)) per exploded row once the join's
     # constraints propagate — measured 20x slowdown. Below a Generate the
     # array is a bound attribute and is computed exactly once per doc.
-    from ..operators.dedup import _spread
+    from ..operators.util import _spread
 
     docs = _spread(docs)  # a single-split corpus parquet would serialize
     # the shingle build + broadcast probe onto one core; no-op at scale

@@ -23,18 +23,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
-from .util import track_persisted
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition ONLY when the source is under-partitioned (a small local
-    parquet arrives as 1 split and serializes the md5-heavy map work onto
-    one core). At corpus scale inputs already carry >= cores splits and this
-    is a no-op — no shuffle is added."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from .util import _spread, track_persisted
 
 
 def exact_duplicates(

@@ -140,7 +140,7 @@ def halo_exchange(tiles: DataFrame, radius: int) -> DataFrame:
         th.alias("bh"),
         px.alias("block"),
     )
-    from .dedup import _spread
+    from .util import _spread
 
     return (
         _spread(

@@ -31,6 +31,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
+from ..kernels.cells import cell_size
+from . import cells
 from .util import track_persisted
 
 
@@ -41,19 +43,18 @@ def _dist(x1, y1, x2, y2):
 def _disk_pairs(a: DataFrame, b: DataFrame, kx: int, ky: int, res: int) -> DataFrame:
     """Cell-disk band join: every row of `a` (ax, ay) meets every row of `b`
     (bx, by) whose level-`res` cell lies in the (2kx+1)x(2ky+1) disk around
-    the `a` row's own cell (cx, cy), by an equi-join on the cell (jx, jy)."""
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
+    the `a` row's own cell (cx, cy), by an equi-join on the cell (jx, jy).
+    The cell indices are unclamped (native-unit coordinates)."""
     ac = a.select(
         "*",
-        F.floor((F.col("ax") + 180.0) / w).alias("cx"),
-        F.floor((F.col("ay") + 90.0) / h).alias("cy"),
+        cells.raw_index(F.col("ax"), res, 0).alias("cx"),
+        cells.raw_index(F.col("ay"), res, 1).alias("cy"),
     )
     ac = ac.select("*", F.explode(F.sequence(F.lit(-kx), F.lit(kx))).alias("dx"))
     ac = ac.select("*", F.explode(F.sequence(F.lit(-ky), F.lit(ky))).alias("dy"))
     ac = ac.withColumn("jx", F.col("cx") + F.col("dx")).withColumn("jy", F.col("cy") + F.col("dy"))
-    bc = b.withColumn("jx", F.floor((F.col("bx") + 180.0) / w)).withColumn(
-        "jy", F.floor((F.col("by") + 90.0) / h)
+    bc = b.withColumn("jx", cells.raw_index(F.col("bx"), res, 0)).withColumn(
+        "jy", cells.raw_index(F.col("by"), res, 1)
     )
     return ac.join(bc, ["jx", "jy"])
 
@@ -88,8 +89,8 @@ def near_table(
     if radius is None:
         pairs = a.crossJoin(b)
     else:
-        n = 1 << res
-        kx, ky = int(radius / (360.0 / n)) + 1, int(radius / (180.0 / n)) + 1
+        w, h = cell_size(res)
+        kx, ky = int(radius / w) + 1, int(radius / h) + 1
         pairs = _disk_pairs(a, b, kx, ky, res)
     out = pairs.withColumn("distance", _dist(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")))
     if radius is not None:
@@ -175,8 +176,6 @@ def knn(
     boundary (no point outside the disk can be nearer). Kept points leave
     the fold; the points left after ring 16 take the exact cross join.
     """
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
     a = points.select(
         F.col("point_id").alias("from_id"), F.col("x").alias("ax"), F.col("y").alias("ay")
     )
@@ -209,11 +208,8 @@ def knn(
             .persist()
         )
         handles.append(ranked)
-        bound = F.least(
-            F.col("ax") - ((F.col("cx") - ring) * w - 180.0),
-            ((F.col("cx") + ring + 1) * w - 180.0) - F.col("ax"),
-            F.col("ay") - ((F.col("cy") - ring) * h - 90.0),
-            ((F.col("cy") + ring + 1) * h - 90.0) - F.col("ay"),
+        bound = cells.ring_min_distance(
+            F.col("ax"), F.col("ay"), F.col("cx"), F.col("cy"), ring, res
         )
         kept = ranked.filter(F.col("kth") <= bound)
         results.append(kept.select(*cols))

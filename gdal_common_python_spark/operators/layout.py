@@ -10,7 +10,7 @@ dominant cost is the SCAN, and scan cost is decided by layout. Two tools:
   adjacent rows into the same files, so parquet row-group min/max stats
   prune bbox queries server-side — the same trick Delta/Iceberg OPTIMIZE
   ZORDER applies, derived here from the engine's own cell scheme
-  (kernels/cells.py: ix/iy quadtree indices).
+  (the ix/iy quadtree indices of ``operators/cells.py``).
 - ``cell_rollup``: multi-resolution aggregation pyramid (H3-style res 7-12
   rollup): aggregate once at the finest resolution, then fold each coarser
   level from the PREVIOUS level by parent-cell summation — one shuffle over
@@ -22,26 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .spatial_join import cell_expr
-
-_RES_SHIFT, _IX_SHIFT = 58, 29
-_IDX_MASK = (1 << 29) - 1
-
-
-def _grid_ix(lon_col: Column, res: int) -> Column:
-    n = 1 << res
-    return F.least(
-        F.greatest(F.floor((lon_col + F.lit(180.0)) / F.lit(360.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-
-
-def _grid_iy(lat_col: Column, res: int) -> Column:
-    n = 1 << res
-    return F.least(
-        F.greatest(F.floor((lat_col + F.lit(90.0)) / F.lit(180.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
+from ..kernels.cells import IX_SHIFT, RES_SHIFT, cell_size
+from . import cells as cellc  # `cells` is a parameter name here
 
 
 def zorder_key(lon_col: Column, lat_col: Column, res: int = 12) -> Column:
@@ -50,7 +32,7 @@ def zorder_key(lon_col: Column, lat_col: Column, res: int = 12) -> Column:
     codegen expression — the formula ports verbatim to the DuckDB oracle."""
     if not 1 <= res <= 29:
         raise ValueError(f"res must be in [1, 29], got {res}")
-    ix, iy = _grid_ix(lon_col, res), _grid_iy(lat_col, res)
+    ix, iy = cellc.index(lon_col, res, 0), cellc.index(lat_col, res, 1)
     key = F.lit(0).cast("long")
     for b in range(res):
         key = key + F.shiftleft(F.shiftright(ix, b) % 2, 2 * b + 1)
@@ -83,19 +65,6 @@ def layout_by_zorder(
     return out.sortWithinPartitions(key_col)
 
 
-def _ancestor_cell(cell: Column, child_res: int, res: int) -> Column:
-    """Native ancestor derivation (kernels.cells.parent) from a cell id at
-    ``child_res`` up to ``res`` — pure long bit arithmetic."""
-    ix = F.shiftright(cell, _IX_SHIFT) % F.lit(1 << _IX_SHIFT)
-    iy = cell % F.lit(1 << _IX_SHIFT)
-    s = child_res - res
-    return (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + F.shiftleft(F.shiftright(ix, s), _IX_SHIFT)
-        + F.shiftright(iy, s)
-    )
-
-
 def cell_rollup(
     points: DataFrame,
     lon_col: str = "x",
@@ -118,7 +87,7 @@ def cell_rollup(
     if not 0 <= res_coarse <= res_fine:
         raise ValueError(f"need 0 <= res_coarse <= res_fine, got {res_coarse}/{res_fine}")
     fine = (
-        points.select(cell_expr(F.col(lon_col), F.col(lat_col), res_fine).alias("cell"))
+        points.select(cellc.cell_id(F.col(lon_col), F.col(lat_col), res_fine).alias("cell"))
         .groupBy("cell")
         .agg(F.count("*").alias("n_points"))
     )
@@ -126,7 +95,7 @@ def cell_rollup(
         *[
             F.struct(
                 F.lit(r).alias("res"),
-                _ancestor_cell(F.col("cell"), res_fine, r).alias("cell"),
+                cellc.parent(F.col("cell"), res_fine, r).alias("cell"),
             )
             for r in range(res_coarse, res_fine + 1)
         ]
@@ -147,28 +116,19 @@ def cover_bbox_cells(
     ymax_col: str = "ymax",
 ) -> DataFrame:
     """Native (pure codegen) bbox covering at ``res``: every cell whose
-    rectangle intersects each row's bbox — the Column-expression twin of
-    ``kernels.cells.cover_bbox`` (H3 polyfill analog on the quadtree
-    scheme). One row per (input row, cell); fan-out is bounded by the
-    bbox/cell size ratio, never data-dependent. Formula ports verbatim to
-    the DuckDB oracle (floor/clamp + two unnested integer sequences)."""
+    rectangle intersects each row's bbox — ``cells.cover_bbox`` with the
+    cell id packed (H3 polyfill analog on the quadtree scheme). One row
+    per (input row, cell); fan-out is bounded by the bbox/cell size ratio,
+    never data-dependent. Formula ports verbatim to the DuckDB oracle
+    (floor/clamp + two unnested integer sequences)."""
     if not 0 <= res <= 29:
         raise ValueError(f"res must be in [0, 29], got {res}")
-    out = (
-        df.withColumn("__ix0", _grid_ix(F.col(xmin_col), res))
-        .withColumn("__ix1", _grid_ix(F.col(xmax_col), res))
-        .withColumn("__iy0", _grid_iy(F.col(ymin_col), res))
-        .withColumn("__iy1", _grid_iy(F.col(ymax_col), res))
-        .withColumn("__ix", F.explode(F.sequence("__ix0", "__ix1")))
-        .withColumn("__iy", F.explode(F.sequence("__iy0", "__iy1")))
+    out = cellc.cover_bbox(
+        df, F.col(xmin_col), F.col(ymin_col), F.col(xmax_col), F.col(ymax_col), res,
+        "__ix", "__iy",
     )
-    cell = (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + F.shiftleft(F.col("__ix"), _IX_SHIFT)
-        + F.col("__iy")
-    )
-    return out.withColumn("cell", cell).drop(
-        "__ix0", "__ix1", "__iy0", "__iy1", "__ix", "__iy"
+    return out.withColumn("cell", cellc.pack(res, F.col("__ix"), F.col("__iy"))).drop(
+        "__ix", "__iy"
     )
 
 
@@ -198,10 +158,10 @@ def compact_cells(
     from pyspark.sql.window import Window
 
     cur = cells.select(F.col(cell_col).alias("cell")).distinct()
+    res_c = cellc.unpack(F.col("cell"))[0]
     for r in range(from_res, to_res, -1):
-        res_c = F.shiftright(F.col("cell"), _RES_SHIFT)
         key = F.when(
-            res_c == r, _ancestor_cell(F.col("cell"), r, r - 1)
+            res_c == r, cellc.parent(F.col("cell"), r, r - 1)
         ).otherwise(F.col("cell"))
         w = Window.partitionBy("__k")
         cur = (
@@ -233,9 +193,7 @@ def uncompact_cells(
     if not 0 <= res <= 29:
         raise ValueError(f"res must be in [0, 29], got {res}")
     c = F.col(cell_col)
-    res_c = F.shiftright(c, _RES_SHIFT)
-    ix = F.shiftright(c, _IX_SHIFT) % F.lit(1 << _IX_SHIFT)
-    iy = c % F.lit(1 << _IX_SHIFT)
+    res_c, ix, iy = cellc.unpack(c)
     # 2^(res - cell_res) via pow: exact in double for exponents <= 29,
     # then exact long arithmetic (shiftleft-by-a-Column has no Spark API)
     n = F.pow(F.lit(2.0), (F.lit(res) - res_c).cast("double")).cast("long")
@@ -248,11 +206,7 @@ def uncompact_cells(
         .withColumn("__dx", F.explode(F.sequence(F.lit(0).cast("long"), F.col("__n") - 1)))
         .withColumn("__dy", F.explode(F.sequence(F.lit(0).cast("long"), F.col("__n") - 1)))
     )
-    child = (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + (F.col("__ix0") + F.col("__dx")) * F.lit(1 << _IX_SHIFT).cast("long")
-        + (F.col("__iy0") + F.col("__dy"))
-    )
+    child = cellc.pack(res, F.col("__ix0") + F.col("__dx"), F.col("__iy0") + F.col("__dy"))
     return out.select(child.alias("cell")).distinct()
 
 
@@ -269,10 +223,10 @@ def cover_bbox_cells_oracle_sql(
     separate SELECT levels (two unnests in ONE DuckDB select would zip,
     not cross)."""
     n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
+    w, h = cell_size(res)
     return f"""
-SELECT DISTINCT (CAST({res} AS BIGINT) * {1 << _RES_SHIFT})
-       + ix * {1 << _IX_SHIFT} + unnest(generate_series(iy0, iy1)) AS cell
+SELECT DISTINCT (CAST({res} AS BIGINT) * {1 << RES_SHIFT})
+       + ix * {1 << IX_SHIFT} + unnest(generate_series(iy0, iy1)) AS cell
 FROM (
   SELECT unnest(generate_series(ix0, ix1)) AS ix, iy0, iy1
   FROM (
@@ -291,24 +245,24 @@ def compact_cells_oracle_sql(cover_sql: str, from_res: int, to_res: int) -> str:
     window-count + CASE + DISTINCT round unrolled ``from_res - to_res``
     times (the engine's loop is the same fixed literal count), each level
     using the verbatim shift/mod parent arithmetic."""
-    m = 1 << _IX_SHIFT
+    m = 1 << IX_SHIFT
     parts = [f"l{from_res + 1} AS ({cover_sql})"]
     for r in range(from_res, to_res, -1):
         parent = (
-            f"(CAST({r - 1} AS BIGINT) * {1 << _RES_SHIFT})"
+            f"(CAST({r - 1} AS BIGINT) * {1 << RES_SHIFT})"
             f" + (((cell // {m}) % {m}) // 2) * {m}"
             f" + ((cell % {m}) // 2)"
         )
         parts.append(f"""l{r} AS (
-  SELECT DISTINCT CASE WHEN (cell // {1 << _RES_SHIFT}) = {r} AND cnt = 4
+  SELECT DISTINCT CASE WHEN (cell // {1 << RES_SHIFT}) = {r} AND cnt = 4
                        THEN k ELSE cell END AS cell
   FROM (
     SELECT cell, k,
-           sum(CASE WHEN (cell // {1 << _RES_SHIFT}) = {r} THEN 1 ELSE 0 END)
+           sum(CASE WHEN (cell // {1 << RES_SHIFT}) = {r} THEN 1 ELSE 0 END)
              OVER (PARTITION BY k) AS cnt
     FROM (
       SELECT cell,
-             CASE WHEN (cell // {1 << _RES_SHIFT}) = {r} THEN {parent}
+             CASE WHEN (cell // {1 << RES_SHIFT}) = {r} THEN {parent}
                   ELSE cell END AS k
       FROM l{r + 1}
     )
@@ -318,7 +272,7 @@ def compact_cells_oracle_sql(cover_sql: str, from_res: int, to_res: int) -> str:
     return (
         "WITH "
         + ",\n".join(parts)
-        + f"\nSELECT cell // {1 << _RES_SHIFT} AS res, cell FROM l{to_res + 1}"
+        + f"\nSELECT cell // {1 << RES_SHIFT} AS res, cell FROM l{to_res + 1}"
     )
 
 
@@ -372,11 +326,11 @@ def grid_disk(
     out_col: str = "neighbor",
 ) -> DataFrame:
     """H3 ``gridDisk`` analog on the quadtree scheme: one row per (input
-    row, cell within Chebyshev ring distance <= ``k``) — the neighborhood
-    expansion the kNN ring search uses (``kernels.cells.disk``), exposed as
-    a pure-codegen DataFrame op. Neighbors that would fall outside the
-    [0, 2^res) index domain are dropped (the grid does not wrap; H3's
-    pentagon-distortion caveat maps to this edge clipping here).
+    row, cell within Chebyshev ring distance <= ``k``) — ``cells.disk``
+    with the neighbor id packed, as a pure-codegen DataFrame op. Neighbors
+    that would fall outside the [0, 2^res) index domain are dropped (the
+    grid does not wrap; H3's pentagon-distortion caveat maps to this edge
+    clipping here).
 
     Fan-out is the fixed (2k+1)^2 bound — never data-dependent — so the
     explode stays safe at any corpus size; no shuffle is introduced.
@@ -386,21 +340,9 @@ def grid_disk(
         raise ValueError(f"res must be in [0, 29], got {res}")
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
-    n = 1 << res
-    m = F.lit(1 << _IX_SHIFT)
-    ix = F.shiftright(F.col(cell_col), _IX_SHIFT) % m
-    iy = F.col(cell_col) % m
-    out = (
-        df.withColumn("__nix", F.explode(F.sequence(
-            F.greatest(ix - k, F.lit(0)), F.least(ix + k, F.lit(n - 1)))))
-        .withColumn("__niy", F.explode(F.sequence(
-            F.greatest(iy - k, F.lit(0)), F.least(iy + k, F.lit(n - 1)))))
-    )
-    nb = (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + F.shiftleft(F.col("__nix"), _IX_SHIFT)
-        + F.col("__niy")
-    )
+    _, ix, iy = cellc.unpack(F.col(cell_col))
+    out = cellc.disk(df, ix, iy, k, k, res, "__nix", "__niy")
+    nb = cellc.pack(res, F.col("__nix"), F.col("__niy"))
     return out.withColumn(out_col, nb).drop("__nix", "__niy")
 
 
@@ -408,11 +350,8 @@ def grid_distance(cell_a: Column, cell_b: Column) -> Column:
     """H3 ``gridDistance`` analog: Chebyshev cell distance between two
     same-resolution cells (the ring index at which ``grid_disk`` from one
     first reaches the other). Pure integer codegen; ports verbatim to SQL."""
-    m = F.lit(1 << _IX_SHIFT)
-    ixa = F.shiftright(cell_a, _IX_SHIFT) % m
-    iya = cell_a % m
-    ixb = F.shiftright(cell_b, _IX_SHIFT) % m
-    iyb = cell_b % m
+    _, ixa, iya = cellc.unpack(cell_a)
+    _, ixb, iyb = cellc.unpack(cell_b)
     return F.greatest(F.abs(ixa - ixb), F.abs(iya - iyb))
 
 
@@ -421,10 +360,10 @@ def grid_disk_oracle_sql(cells_rel: str, res: int, k: int,
     """DuckDB mirror of :func:`grid_disk`: the same clamp + two integer
     sequences, unnested in two SELECT levels (one level would zip)."""
     n = 1 << res
-    m = 1 << _IX_SHIFT
+    m = 1 << IX_SHIFT
     return f"""
 SELECT * EXCLUDE (__ix, __iy, __nix),
-       (CAST({res} AS BIGINT) * {1 << _RES_SHIFT})
+       (CAST({res} AS BIGINT) * {1 << RES_SHIFT})
        + __nix * {m}
        + unnest(generate_series(greatest(__iy - {k}, 0),
                                 least(__iy + {k}, {n - 1}))) AS neighbor
@@ -456,8 +395,6 @@ def polyfill(
     never a corpus. Bit-exact vs the oracle."""
     if not 0 <= res <= 29:
         raise ValueError(f"res must be in [0, 29], got {res}")
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
     cov = cover_bbox_cells(
         zones.select(
             F.col(id_col),
@@ -468,9 +405,8 @@ def polyfill(
         ),
         res=res,
     ).select(id_col, "cell")
-    m = F.lit(1 << _IX_SHIFT)
-    cx = F.lit(-180.0) + (F.shiftright("cell", _IX_SHIFT) % m + F.lit(0.5)) * F.lit(w)
-    cy = F.lit(-90.0) + (F.col("cell") % m + F.lit(0.5)) * F.lit(h)
+    _, ix, iy = cellc.unpack(F.col("cell"))
+    cx, cy = cellc.coord(ix + F.lit(0.5), res, 0), cellc.coord(iy + F.lit(0.5), res, 1)
     cand = cov.select(id_col, "cell", cx.alias("__cx"), cy.alias("__cy"))
     j = cand.join(edges, id_col)
     crossing = (
@@ -496,17 +432,9 @@ def cell_bounds(df: DataFrame, res: int, cell_col: str = "cell") -> DataFrame:
     power-of-two edge arithmetic, ports verbatim to SQL."""
     if not 0 <= res <= 29:
         raise ValueError(f"res must be in [0, 29], got {res}")
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
-    m = F.lit(1 << _IX_SHIFT)
-    ix = F.shiftright(F.col(cell_col), _IX_SHIFT) % m
-    iy = F.col(cell_col) % m
-    return (
-        df.withColumn("cell_xmin", F.lit(-180.0) + ix * F.lit(w))
-        .withColumn("cell_ymin", F.lit(-90.0) + iy * F.lit(h))
-        .withColumn("cell_xmax", F.lit(-180.0) + (ix + 1) * F.lit(w))
-        .withColumn("cell_ymax", F.lit(-90.0) + (iy + 1) * F.lit(h))
-    )
+    _, ix, iy = cellc.unpack(F.col(cell_col))
+    names = ("cell_xmin", "cell_ymin", "cell_xmax", "cell_ymax")
+    return df.withColumns(dict(zip(names, cellc.bounds(ix, iy, res))))
 
 
 def polyfill_oracle_sql(
@@ -515,12 +443,12 @@ def polyfill_oracle_sql(
     """DuckDB oracle for :func:`polyfill`: per-zone bbox covering (verbatim
     clamp arithmetic, zone id carried) + crossing-parity center test."""
     n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
-    m = 1 << _IX_SHIFT
+    w, h = cell_size(res)
+    m = 1 << IX_SHIFT
     return f"""
 WITH cov AS (
   SELECT {id_col},
-         (CAST({res} AS BIGINT) * {1 << _RES_SHIFT})
+         (CAST({res} AS BIGINT) * {1 << RES_SHIFT})
          + ix * {m}
          + unnest(generate_series(iy0, iy1)) AS cell
   FROM (
@@ -573,19 +501,16 @@ def cell_smooth(
     operates entirely in cell space."""
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
-    n = 1 << res
     counts = (
-        points.select(cell_expr(F.col(lon_col), F.col(lat_col), res).alias("cell"))
+        points.select(cellc.cell_id(F.col(lon_col), F.col(lat_col), res).alias("cell"))
         .groupBy("cell")
         .agg(F.count("*").alias("n"))
     )
     dil = grid_disk(counts, res, k, cell_col="cell", out_col="neighbor")
-    m = F.lit(1 << _IX_SHIFT)
-    ix = F.shiftright(F.col("cell"), _IX_SHIFT) % m
-    iy = F.col("cell") % m
+    _, ix, iy = cellc.unpack(F.col("cell"))
     area = (
-        (F.least(ix + k, F.lit(n - 1)) - F.greatest(ix - k, F.lit(0)) + 1)
-        * (F.least(iy + k, F.lit(n - 1)) - F.greatest(iy - k, F.lit(0)) + 1)
+        (cellc.clamp(ix + k, res) - cellc.clamp(ix - k, res) + 1)
+        * (cellc.clamp(iy + k, res) - cellc.clamp(iy - k, res) + 1)
     ).cast("long")
     return (
         dil.groupBy(F.col("neighbor").alias("cell"))
@@ -603,10 +528,10 @@ def cell_smooth_oracle_sql(pts_cte: str, res: int = 9, k: int = 1) -> str:
     """DuckDB mirror of :func:`cell_smooth` — same census, the
     :func:`grid_disk_oracle_sql` dilation, and the clipped-window area."""
     n = 1 << res
-    m = 1 << _IX_SHIFT
-    w, h = 360.0 / n, 180.0 / n
+    m = 1 << IX_SHIFT
+    w, h = cell_size(res)
     counts = f"""
-  SELECT (CAST({res} AS BIGINT) * {1 << _RES_SHIFT}) + ix * {m} + iy AS cell,
+  SELECT (CAST({res} AS BIGINT) * {1 << RES_SHIFT}) + ix * {m} + iy AS cell,
          CAST(count(*) AS BIGINT) AS n
   FROM (
     SELECT

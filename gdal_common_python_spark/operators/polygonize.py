@@ -104,7 +104,7 @@ def _label_tile(arr: np.ndarray, nodata: float, gx0: int, gy0: int) -> np.ndarra
 
 
 def _tiles_in(tiles: DataFrame) -> DataFrame:
-    from .dedup import _spread
+    from .util import _spread
 
     return _spread(
         tiles.select(

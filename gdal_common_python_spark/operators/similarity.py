@@ -269,7 +269,7 @@ def ivf_topk(
         order = np.argsort(-sims, axis=1)[:, : min(n_probe, Cm.shape[0])]
         return pd.Series([row.astype(np.int32).tolist() for row in order])
 
-    from .dedup import _spread
+    from .util import _spread
 
     base = _spread(
         emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v"))
@@ -395,7 +395,7 @@ def cosine_near_dup(
     value; summation order differs between BLAS, Spark folds, and DuckDB's
     list_cosine_similarity anyway, and the synthesized input keeps a wide
     margin around the threshold so fp noise can never flip membership."""
-    from .dedup import _spread
+    from .util import _spread
 
     spark = emb.sparkSession
     pdf = emb.select(id_col, vec_col).limit(collect_limit + 1).toPandas()

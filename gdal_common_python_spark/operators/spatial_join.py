@@ -39,28 +39,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..kernels import cells as cellk, geom, proj
+from . import cells
 
 POINT_RX = r"POINT\(([-+0-9.eE]+) ([-+0-9.eE]+)\)"
 
-_RES_SHIFT, _IX_SHIFT = 58, 29
-
-
-def cell_expr(lon_col, lat_col, res: int):
-    """Native (JVM codegen) cell encoding — mirrors kernels.cells.encode."""
-    n = 1 << res
-    ix = F.least(
-        F.greatest(F.floor((lon_col + F.lit(180.0)) / F.lit(360.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    )
-    iy = F.least(
-        F.greatest(F.floor((lat_col + F.lit(90.0)) / F.lit(180.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    )
-    return (
-        F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + ix.cast("long") * F.lit(1 << _IX_SHIFT).cast("long")
-        + iy.cast("long")
-    )
+# the old name of cells.cell_id, kept for callers outside the engine
+cell_expr = cells.cell_id
 
 
 def geo_spans(docs: DataFrame, points_only: bool = False) -> DataFrame:
@@ -211,22 +195,16 @@ def zone_cells(
             F.when(is_merc, inv_x2).otherwise(F.col("bbox.xmax")).alias("xmax"),
             F.when(is_merc, inv_y2).otherwise(F.col("bbox.ymax")).alias("ymax"),
         )
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
-
-    def idx(col, lo, size, limit):
-        return F.least(F.greatest(F.floor((col + F.lit(lo)) / F.lit(size)), F.lit(0)), F.lit(limit - 1))
-
     carry = ["xmin", "ymin", "xmax", "ymax"] if with_bbox else []
     anchor = (
         [F.col("ix0").alias("zix0"), F.col("iy0").alias("ziy0")] if with_anchor else []
     )
     z = z.select(
         "zone_id",
-        idx(F.col("xmin"), 180.0, w, n).alias("ix0"),
-        idx(F.col("xmax"), 180.0, w, n).alias("ix1"),
-        idx(F.col("ymin"), 90.0, h, n).alias("iy0"),
-        idx(F.col("ymax"), 90.0, h, n).alias("iy1"),
+        cells.index(F.col("xmin"), res, 0).alias("ix0"),
+        cells.index(F.col("xmax"), res, 0).alias("ix1"),
+        cells.index(F.col("ymin"), res, 1).alias("iy0"),
+        cells.index(F.col("ymax"), res, 1).alias("iy1"),
         *carry,
     )
     return (
@@ -237,11 +215,7 @@ def zone_cells(
         .select("zone_id", "ix", F.explode(F.sequence("iy0", "iy1")).alias("iy"), "ix0", "iy0", *carry)
         .select(
             "zone_id",
-            (
-                F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-                + F.col("ix").cast("long") * F.lit(1 << _IX_SHIFT).cast("long")
-                + F.col("iy").cast("long")
-            ).alias("cell"),
+            cells.pack(res, F.col("ix"), F.col("iy")).alias("cell"),
             *anchor,
             *carry,
         )
@@ -343,7 +317,7 @@ def spatial_join_points(
     use_bbox = os.environ.get("SPARK_GRAFT_BBOX_PREFILTER", "1") != "0"
     zc = zone_cells(spark, zones, res, with_bbox=use_bbox)
 
-    pts = pts.withColumn("cell", cell_expr(F.col("x"), F.col("y"), res))
+    pts = pts.withColumn("cell", cells.cell_id(F.col("x"), F.col("y"), res))
 
     if strategy == "auto":
         # estimate the exploded zone-cell count from the collected bboxes
@@ -492,7 +466,7 @@ def spatial_join_points_distributed(
     when the edge table is dimension-sized), final groupBy — with map-side
     partial counts, the last exchange carries ~one row per candidate pair.
     """
-    pts = geo_points(docs).withColumn("cell", cell_expr(F.col("x"), F.col("y"), res))
+    pts = geo_points(docs).withColumn("cell", cells.cell_id(F.col("x"), F.col("y"), res))
     zc = zone_cells(spark, zones, res, with_bbox=True)
     cand = bbox_prefilter(pts.join(zc, "cell")).select(
         "doc_id", "offset", "x", "y", "zone_id"
@@ -601,32 +575,16 @@ def spatial_join_geoms(
             rows.append(geom.rings_bbox(rings))
         return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
 
-    n_ = 1 << res
-    w_, h_ = 360.0 / n_, 180.0 / n_
-
-    def _idx(col, lo, size):
-        return F.least(
-            F.greatest(F.floor((col + F.lit(lo)) / F.lit(size)), F.lit(0)), F.lit(n_ - 1)
-        )
-
-    sp = (
-        spans.withColumn("__bb", span_bbox("wkt"))
-        .select(
+    sp = cells.explode_rect(
+        spans.withColumn("__bb", span_bbox("wkt")).select(
             *spans.columns,
-            _idx(F.col("__bb.xmin"), 180.0, w_).alias("sx0"),
-            _idx(F.col("__bb.xmax"), 180.0, w_).alias("sx1"),
-            _idx(F.col("__bb.ymin"), 90.0, h_).alias("sy0"),
-            _idx(F.col("__bb.ymax"), 90.0, h_).alias("sy1"),
-        )
-        .withColumn("ix", F.explode(F.sequence("sx0", "sx1")))
-        .withColumn("iy", F.explode(F.sequence("sy0", "sy1")))
-        .withColumn(
-            "cell",
-            F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-            + F.col("ix").cast("long") * F.lit(1 << _IX_SHIFT).cast("long")
-            + F.col("iy").cast("long"),
-        )
-    )
+            cells.index(F.col("__bb.xmin"), res, 0).alias("sx0"),
+            cells.index(F.col("__bb.xmax"), res, 0).alias("sx1"),
+            cells.index(F.col("__bb.ymin"), res, 1).alias("sy0"),
+            cells.index(F.col("__bb.ymax"), res, 1).alias("sy1"),
+        ),
+        "sx0", "sx1", "sy0", "sy1",
+    ).withColumn("cell", cells.pack(res, F.col("ix"), F.col("iy")))
     # report-once dedup WITHOUT a shuffle: both covers are contiguous index
     # rectangles, so each (span, zone) pair shares a rectangle of cells and
     # the pair is emitted only at that rectangle's min corner — a codegen
@@ -909,16 +867,8 @@ def skew_report(
     All-integer arithmetic (`div`), so the oracle hash-matches."""
     if top_k < 1 or target_rows < 1:
         raise ValueError("top_k and target_rows must be >= 1")
-    n = 1 << res
     pts = geo_points(docs)
-    ix = F.least(
-        F.greatest(F.floor((F.col("x") + F.lit(180.0)) / F.lit(360.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    iy = F.least(
-        F.greatest(F.floor((F.col("y") + F.lit(90.0)) / F.lit(180.0 / n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
+    ix, iy = cells.index(F.col("x"), res, 0), cells.index(F.col("y"), res, 1)
     from .util import track_persisted
 
     # persist the dimension-sized census so the total and the join share ONE
@@ -1032,31 +982,17 @@ def edge_intersections(
     edges x covered cells, never the all-pairs square. The refine is one
     fixed IEEE expression tree (2x2 determinant solve), identical in the
     DuckDB oracle, so results are hash-exact."""
-    n = 1 << res
-    cw, chh = 360.0 / n, 180.0 / n
-
-    def cells_of(p: str) -> DataFrame:
-        lo_x = F.floor((F.least(f"{p}ex1", f"{p}ex2") + F.lit(180.0)) / F.lit(cw)).cast("long")
-        hi_x = F.floor((F.greatest(f"{p}ex1", f"{p}ex2") + F.lit(180.0)) / F.lit(cw)).cast("long")
-        lo_y = F.floor((F.least(f"{p}ey1", f"{p}ey2") + F.lit(90.0)) / F.lit(chh)).cast("long")
-        hi_y = F.floor((F.greatest(f"{p}ey1", f"{p}ey2") + F.lit(90.0)) / F.lit(chh)).cast("long")
-        clamp = lambda c: F.least(F.greatest(c, F.lit(0)), F.lit(n - 1))  # noqa: E731
-        return (
-            F.explode(F.sequence(clamp(lo_x), clamp(hi_x))).alias("cx"),
-            F.sequence(clamp(lo_y), clamp(hi_y)).alias("__cys"),
-        )
-
     def side(tag: str) -> DataFrame:
         e = edges.select(
             F.col("zone_id").alias(f"{tag}zone"),
             F.col("ex1").alias(f"{tag}ex1"), F.col("ey1").alias(f"{tag}ey1"),
             F.col("ex2").alias(f"{tag}ex2"), F.col("ey2").alias(f"{tag}ey2"),
         )
-        cx, cys = cells_of(tag)
-        return (
-            e.select("*", cx, cys)
-            .select("*", F.explode("__cys").alias("cy"))
-            .drop("__cys")
+        return cells.cover_bbox(
+            e,
+            F.least(f"{tag}ex1", f"{tag}ex2"), F.least(f"{tag}ey1", f"{tag}ey2"),
+            F.greatest(f"{tag}ex1", f"{tag}ex2"), F.greatest(f"{tag}ey1", f"{tag}ey2"),
+            res, "cx", "cy",
         )
 
     a, b = side("a"), side("b")
@@ -1689,38 +1625,22 @@ def _nearest_zone_distance_bucketed(
     """
     from .util import track_persisted
 
-    n = 1 << res
-    cw, chh = 360.0 / n, 180.0 / n
-
-    def _clamp(c):
-        return F.least(F.greatest(c, F.lit(0)), F.lit(n - 1))
+    cw, chh = cellk.cell_size(res)
 
     e = edges.select("zone_id", "ex1", "ey1", "ex2", "ey2")
-    ec = (
-        e.select(
-            "*",
-            F.explode(
-                F.sequence(
-                    _clamp(F.floor((F.least("ex1", "ex2") + F.lit(180.0)) / F.lit(cw)).cast("long")),
-                    _clamp(F.floor((F.greatest("ex1", "ex2") + F.lit(180.0)) / F.lit(cw)).cast("long")),
-                )
-            ).alias("cx"),
-            F.sequence(
-                _clamp(F.floor((F.least("ey1", "ey2") + F.lit(90.0)) / F.lit(chh)).cast("long")),
-                _clamp(F.floor((F.greatest("ey1", "ey2") + F.lit(90.0)) / F.lit(chh)).cast("long")),
-            ).alias("__cys"),
-        )
-        .select("*", F.explode("__cys").alias("cy"))
-        .drop("__cys")
+    ec = cells.cover_bbox(
+        e, F.least("ex1", "ex2"), F.least("ey1", "ey2"),
+        F.greatest("ex1", "ex2"), F.greatest("ey1", "ey2"), res, "cx", "cy",
     )
 
     uncov = (
         spatial_anti_join(spark, docs, zones, **join_kwargs)
         .where(F.col("x").isNotNull() & F.col("y").isNotNull())
-        .withColumn("pcx", _clamp(F.floor((F.col("x") + F.lit(180.0)) / F.lit(cw)).cast("long")))
-        .withColumn("pcy", _clamp(F.floor((F.col("y") + F.lit(90.0)) / F.lit(chh)).cast("long")))
+        .withColumn("pcx", cells.index(F.col("x"), res, 0))
+        .withColumn("pcy", cells.index(F.col("y"), res, 1))
         .persist()
     )
+    pcx, pcy = F.col("pcx"), F.col("pcy")
 
     px_, py_ = F.col("x"), F.col("y")
     ax, ay, bx, by = F.col("ex1"), F.col("ey1"), F.col("ex2"), F.col("ey2")
@@ -1728,11 +1648,9 @@ def _nearest_zone_distance_bucketed(
     d2b = (px_ - bx) * (px_ - bx) + (py_ - by) * (py_ - by)
 
     # bound round 1: 3x3 cell disk
-    disk1 = uncov.select(
-        "doc_id", "offset", "x", "y",
-        F.explode(F.sequence(_clamp(F.col("pcx") - 1), _clamp(F.col("pcx") + 1))).alias("cx"),
-        F.sequence(_clamp(F.col("pcy") - 1), _clamp(F.col("pcy") + 1)).alias("__cys"),
-    ).select("doc_id", "offset", "x", "y", "cx", F.explode("__cys").alias("cy"))
+    disk1 = cells.disk(
+        uncov.select("doc_id", "offset", "x", "y", "pcx", "pcy"), pcx, pcy, 1, 1, res, "cx", "cy"
+    )
     b1 = (
         disk1.join(ec, ["cx", "cy"])
         .select("doc_id", "offset", F.least(d2a, d2b).alias("__d2"))
@@ -1775,11 +1693,10 @@ def _nearest_zone_distance_bucketed(
         F.col("zone_id").alias("nearest_zone"),
     )
 
-    near_disk = near.select(
-        "doc_id", "offset", "x", "y", "__q",
-        F.explode(F.sequence(_clamp(F.col("pcx") - kx), _clamp(F.col("pcx") + kx))).alias("cx"),
-        F.sequence(_clamp(F.col("pcy") - ky), _clamp(F.col("pcy") + ky)).alias("__cys"),
-    ).select("doc_id", "offset", "x", "y", "__q", "cx", F.explode("__cys").alias("cy"))
+    near_disk = cells.disk(
+        near.select("doc_id", "offset", "x", "y", "__q", "pcx", "pcy"), pcx, pcy, kx, ky, res,
+        "cx", "cy",
+    )
     best_near = (
         near_disk.join(ec, ["cx", "cy"])
         .where(lb2 <= F.col("__q") * F.col("__q"))

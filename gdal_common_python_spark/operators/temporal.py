@@ -258,7 +258,7 @@ def interval_join(
     wlit = F.lit(float(bucket_width))
 
     def _bucketed(df: DataFrame, s: str, e: str) -> DataFrame:
-        from .dedup import _spread
+        from .util import _spread
 
         # the bucket fan-out + join probe is the map-heavy stage: spread a
         # single-split source so it doesn't run one-core (no-op at scale)

@@ -202,7 +202,7 @@ def vocabulary(
     shuffle, so shuffle volume is ~vocab-size per partition, not corpus
     token count. The top_k cap is a global sort of the (tiny) aggregated
     table only."""
-    from .dedup import _spread
+    from .util import _spread
 
     toks = (
         _spread(docs.filter(F.length(F.trim(F.col(text_col))) > 0))

@@ -1,4 +1,5 @@
-"""Shared operator plumbing: broadcast size gates and cache handles.
+"""Shared operator plumbing: broadcast size gates, cache handles and the
+spread of under-partitioned inputs.
 
 Broadcast gate: a broadcast hint must be gated on estimated BYTES, not just
 row count — a wide 1M-row dimension (long text, ring arrays) can blow the
@@ -42,6 +43,18 @@ def release(df: DataFrame) -> None:
     for h in getattr(df, _HANDLE_ATTR, ()):
         h.unpersist()
     setattr(df, _HANDLE_ATTR, [])
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Repartition ONLY when the source is under-partitioned (a small local
+    parquet arrives as 1 split and serializes the md5-heavy map work onto
+    one core). At corpus scale inputs already carry >= cores splits and this
+    is a no-op — no shuffle is added."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
 
 DEFAULT_BYTE_LIMIT = 64 << 20  # past ~64 MB a broadcast stops being "small"
 

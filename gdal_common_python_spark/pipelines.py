@@ -46,7 +46,7 @@ def _keep_min_per_key(docs: DataFrame, key, id_col: str, gate=None) -> DataFrame
     the aggregation child it evaluates post-spread, in parallel, exactly
     once per doc. Identical rows either way: gate-then-dedup ==
     dedup-then-gate when the gate is constant per group."""
-    from .operators.dedup import _spread
+    from .operators.util import _spread
     from .operators.util import broadcastable
 
     docs = _spread(docs)

@@ -11,6 +11,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default driver heap: half the host's memory, at most 24 GiB
+    (``SPARK_GRAFT_DRIVER_MEM`` overrides it)."""
+    with open(meminfo) as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(total_kb // 2 // 1024, 24 << 10)}m"
+
+
 def get_spark(app: str = "gdal_common_python_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               executors: int | None = None,
@@ -43,7 +51,7 @@ def get_spark(app: str = "gdal_common_python_spark", cores: int | None = None,
         # iterative operators (connected_components) reliable-checkpoint per
         # round; clean the files when their RDDs are GC'd
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory())
         .config("spark.ui.enabled", "false")
         # this sandbox kernel (firecracker-style) degrades badly under
         # concurrent GC threads: G1's background threads put the JVM at ~60%

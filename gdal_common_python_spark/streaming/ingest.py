@@ -17,7 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..schemas import DOCUMENTS
-from ..operators.spatial_join import POINT_RX, cell_expr
+from ..operators.cells import cell_id
+from ..operators.spatial_join import POINT_RX
 
 
 def stream_documents(spark: SparkSession, input_dir: str, files_per_trigger: int = 8) -> DataFrame:
@@ -53,7 +54,7 @@ def geo_span_cell_counts(
             F.regexp_extract("s.text", POINT_RX, 2).try_cast("double").alias("y"),
             ts.alias("ts"),
         )
-        .withColumn("cell", cell_expr(F.col("x"), F.col("y"), res))
+        .withColumn("cell", cell_id(F.col("x"), F.col("y"), res))
     )
     return (
         pts.withWatermark("ts", watermark)

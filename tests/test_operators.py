@@ -224,6 +224,22 @@ def ring_points(spark):
     return spark.createDataFrame(pd.DataFrame(dict(point_id=np.arange(len(x)), x=x, y=y)))
 
 
+@pytest.fixture(scope="module")
+def edge_points(spark):
+    """Points where knn's raw (unclamped) cell index differs from the
+    clamped one: the res-7 cell-border grid from lon -180 to +180 and lat
+    -90 to +90 (both ends included), random points in two corners, and
+    (180, ±90), (-180, 0)."""
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    w, h = 360.0 / 128, 180.0 / 128
+    gx, gy = np.meshgrid(np.array([0, 1, 2, 126, 127, 128]) * w - 180.0, np.array([0, 1, 127, 128]) * h - 90.0)
+    x = np.concatenate([gx.ravel(), rng.uniform(175.0, 180.0, 8), rng.uniform(-180.0, -175.0, 4), [180.0, 180.0, -180.0]])
+    y = np.concatenate([gy.ravel(), rng.uniform(85.0, 90.0, 8), rng.uniform(-90.0, -85.0, 4), [90.0, -90.0, 0.0]])
+    return spark.createDataFrame(pd.DataFrame(dict(point_id=np.arange(len(x)), x=x, y=y)))
+
+
 def _knn_round_counts(xy, k, res=7):
     """Points resolved by knn's rings 1, 4, 16 and by the brute-force tail."""
     n = 1 << res
@@ -248,9 +264,12 @@ def _knn_round_counts(xy, k, res=7):
 
 class TestKnnNear:
     # (input, how many of rings 1/4/16 + tail it reaches): the synth
-    # near_points resolve within rings 1 and 4; ring_points reach them all
+    # near_points resolve within rings 1 and 4; ring_points and
+    # edge_points reach them all
     @pytest.mark.parametrize(
-        "table,rounds", [("near_points", 2), ("ring_points", 4)], ids=["near_points", "ring_points"]
+        "table,rounds",
+        [("near_points", 2), ("ring_points", 4), ("edge_points", 4)],
+        ids=["near_points", "ring_points", "edge_points"],
     )
     def test_knn_matches_bruteforce(self, spark, request, table, rounds):
         points = request.getfixturevalue(table)
@@ -271,6 +290,19 @@ class TestKnnNear:
                 oracle.add((int(ids[i]), rank, int(ids[j])))
         got = {(r.from_id, r["rank"], r.to_id) for r in out.collect()}
         assert got == oracle
+
+    def test_disk_cells_are_unclamped(self, edge_points):
+        """knn's cell indices are raw floor((v + 180|90) / w): lon 180 lies
+        in column 128, one past the clamped grid's last column."""
+        from gdal_common_python_spark.operators.knn import _disk_pairs
+
+        a = edge_points.select(F.col("point_id").alias("from_id"), F.col("x").alias("ax"), F.col("y").alias("ay"))
+        b = edge_points.select(F.col("point_id").alias("to_id"), F.col("x").alias("bx"), F.col("y").alias("by"))
+        rows = _disk_pairs(a, b, 0, 0, 7).filter(F.col("from_id") == F.col("to_id")).collect()
+        assert len(rows) == edge_points.count()
+        for r in rows:
+            assert (r.cx, r.cy) == (np.floor((r.ax + 180.0) / (360.0 / 128)), np.floor((r.ay + 90.0) / (180.0 / 128)))
+        assert max(r.cx for r in rows) == 128 and max(r.cy for r in rows) == 128
 
     def test_near_table_radius(self, spark, near_points):
         got = near_table(near_points, radius=0.5).collect()
