@@ -29,7 +29,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from gdal_common_python_spark import synth
 from gdal_common_python_spark.functions import dates as D
+from gdal_common_python_spark.kernels.cells import IX_SHIFT, RES_SHIFT
 from gdal_common_python_spark.operators import (
+    cells,
     dedup,
     equi_join,
     knn as knn_ops,
@@ -832,7 +834,7 @@ def q_compact_cells(spark, sf_dir):
     res 9 (native codegen polyfill) -> distinct cells -> complete
     4-sibling groups promoted level-by-level down to res 5. All integer
     shift/mod codegen; work shrinks 4x per level."""
-    from gdal_common_python_spark.operators import cells, layout as layout_ops
+    from gdal_common_python_spark.operators import layout as layout_ops
 
     z = _synth(spark, sf_dir, "zones").select(
         F.col("bbox4326.xmin").alias("xmin"), F.col("bbox4326.ymin").alias("ymin"),
@@ -1996,11 +1998,12 @@ def q_skew_report(spark, sf_dir):
 
 
 def q_join_partition_metrics(spark, sf_dir):
-    """Per-partition lineage of the flagship PIP join — the bucket rows
-    the checkpoint table commits (streaming/checkpoint.py), as a queryable
-    metrics table: md5-mod-16 bucket of doc_id -> (input_docs,
+    """Per-partition lineage of the flagship PIP join as a queryable
+    metrics table: md5-mod-16 bucket of doc_id -> (input_docs with points,
     input_points, output_rows). The md5 draw is the engine/oracle-shared
-    deterministic bucket identity resume depends on."""
+    deterministic bucket identity. The checkpoint table
+    (streaming/checkpoint.py) keeps its own lineage, bucketed by
+    pmod(xxhash64(doc_id), n) and counting input docs."""
     return sj.join_partition_metrics(
         spark,
         _synth(spark, sf_dir, "documents_spans"),
@@ -2324,11 +2327,7 @@ _SQL_CSV_WKT_ROUNDTRIP = f"SELECT point_id, tag, x, y FROM {_POINTS}"
 
 
 def _sql_grid_ixy(res: int) -> str:
-    n = 1 << res
-    return (
-        f"CAST(least(greatest(floor((px + 180.0) / {360.0 / n!r}), 0), {n - 1}) AS BIGINT) AS ix,"
-        f" CAST(least(greatest(floor((py + 90.0) / {180.0 / n!r}), 0), {n - 1}) AS BIGINT) AS iy"
-    )
+    return f"{cells.sql_index('px', res, 0)} AS ix, {cells.sql_index('py', res, 1)} AS iy"
 
 
 # windowed streaming ingest, replayed deterministically: event time =
@@ -2350,7 +2349,7 @@ t AS (
   FROM pts
 )
 SELECT CAST((epoch // 60) * 60 AS BIGINT) AS win_start,
-       CAST({7 * (1 << 58)} + ix * {1 << 29} + iy AS BIGINT) AS cell,
+       CAST({7 << RES_SHIFT} + ix * {1 << IX_SHIFT} + iy AS BIGINT) AS cell,
        count(*) AS n_spans
 FROM t
 GROUP BY 1, 2
@@ -3630,7 +3629,7 @@ _SQL_CELL_ROLLUP = f"""
 WITH pts AS ({_PTS_CTE})
 {" UNION ALL ".join(
     f'''SELECT {r} AS res,
-       CAST({r} AS BIGINT) * {1 << 58} + ix * {1 << 29} + iy AS cell,
+       CAST({r} AS BIGINT) * {1 << RES_SHIFT} + ix * {1 << IX_SHIFT} + iy AS cell,
        count(*) AS n_points
     FROM (SELECT {_sql_grid_ixy(r)} FROM pts) GROUP BY 1, 2'''
     for r in range(7, 13)
@@ -4689,14 +4688,17 @@ SELECT i.partition_id, i.input_docs, i.input_points,
 FROM inm i LEFT JOIN outm o USING (partition_id)
 """
 
-# zone bbox-center cells at res 9 (verbatim cell_expr arithmetic)
+# zone bbox-center cells at res 9 (cell_expr arithmetic; the line break in
+# each center expression is part of the pinned oracle text)
+_ZIX, _ZIY = (
+    cells.sql_index(f"(bbox4326.{a}min + bbox4326.{a}max) / 2.0\n            ", 9, axis)
+    for axis, a in enumerate("xy")
+)
 _ZCELLS_CTE = f"""
   SELECT zone_id,
-         (CAST(9 AS BIGINT) * {1 << 58})
-         + CAST(least(greatest(floor(((bbox4326.xmin + bbox4326.xmax) / 2.0
-             + 180.0) / {360.0 / 512!r}), 0), 511) AS BIGINT) * {1 << 29}
-         + CAST(least(greatest(floor(((bbox4326.ymin + bbox4326.ymax) / 2.0
-             + 90.0) / {180.0 / 512!r}), 0), 511) AS BIGINT) AS cell
+         (CAST(9 AS BIGINT) * {1 << RES_SHIFT})
+         + {_ZIX} * {1 << IX_SHIFT}
+         + {_ZIY} AS cell
   FROM {_ZONES}
 """
 
@@ -4712,22 +4714,22 @@ from gdal_common_python_spark.operators.layout import (  # noqa: E402
 
 _SQL_POLYFILL = _pf_sql(_ZONES, _EDGES, res=9)
 
-_W9, _H9 = 360.0 / 512, 180.0 / 512
+_CELL_EDGES = ",\n       ".join(
+    f"{e} AS cell_{c}" for e, c in zip(cells.sql_bounds("cell", 9), ("xmin", "ymin", "xmax", "ymax"))
+)
 _SQL_CELL_BOUNDS = f"""
 SELECT zone_id, cell,
-       -180.0 + ((cell // {1 << 29}) % {1 << 29}) * CAST({_W9!r} AS DOUBLE) AS cell_xmin,
-       -90.0 + (cell % {1 << 29}) * CAST({_H9!r} AS DOUBLE) AS cell_ymin,
-       -180.0 + (((cell // {1 << 29}) % {1 << 29}) + 1) * CAST({_W9!r} AS DOUBLE) AS cell_xmax,
-       -90.0 + ((cell % {1 << 29}) + 1) * CAST({_H9!r} AS DOUBLE) AS cell_ymax
+       {_CELL_EDGES}
 FROM ({_ZCELLS_CTE})
 """
 
+(_AIX, _AIY), (_BIX, _BIY) = cells.sql_unpack("a.cell"), cells.sql_unpack("b.cell")
 _SQL_GRID_DISTANCE = f"""
 WITH zc AS ({_ZCELLS_CTE})
 SELECT a.zone_id AS zone_a, b.zone_id AS zone_b,
-       greatest(abs(((a.cell // {1 << 29}) % {1 << 29})
-                    - ((b.cell // {1 << 29}) % {1 << 29})),
-                abs((a.cell % {1 << 29}) - (b.cell % {1 << 29}))) AS grid_dist
+       greatest(abs({_AIX}
+                    - {_BIX}),
+                abs({_AIY} - {_BIY})) AS grid_dist
 FROM zc a JOIN zc b ON a.zone_id < b.zone_id
 """
 

@@ -117,3 +117,29 @@ def ring_min_distance(x: Column, y: Column, ix: Column, iy: Column, k: int, res:
         x - coord(ix - k, res, 0), coord(ix + k + 1, res, 0) - x,
         y - coord(iy - k, res, 1), coord(iy + k + 1, res, 1) - y,
     )
+
+
+# The same formulas spelled as DuckDB SQL, for the oracle text.
+
+
+def sql_index(v: str, res: int, axis: int) -> str:
+    """SQL twin of :func:`index` for the lon/lat expression ``v``."""
+    return (
+        f"CAST(least(greatest(floor(({v} + {ORIGIN[axis]}) / {cell_size(res)[axis]!r}), 0),"
+        f" {(1 << res) - 1}) AS BIGINT)"
+    )
+
+
+def sql_unpack(cell: str) -> tuple[str, str]:
+    """SQL twin of :func:`unpack`'s (ix, iy)."""
+    m = 1 << IX_SHIFT
+    return f"(({cell} // {m}) % {m})", f"({cell} % {m})"
+
+
+def sql_bounds(cell: str, res: int) -> tuple[str, str, str, str]:
+    """SQL twin of :func:`bounds` for the level-``res`` cell id ``cell``."""
+    def coord(i, axis):
+        return f"{-ORIGIN[axis]} + {i} * CAST({cell_size(res)[axis]!r} AS DOUBLE)"
+
+    ix, iy = sql_unpack(cell)
+    return coord(ix, 0), coord(iy, 1), coord(f"({ix} + 1)", 0), coord(f"({iy} + 1)", 1)

@@ -304,8 +304,7 @@ def spatial_join_points(
     # ONE driver-side collect of the (small) zone side feeds everything:
     # resolution pick, refinement edges, and the strategy estimate — no
     # extra Spark jobs on the query path
-    zcols = ["zone_id", "srid", "rings"] + (["rings4326"] if "rings4326" in zones.columns else [])
-    zones_pdf = zones.select(*zcols).toPandas()
+    zones_pdf = zones.select(*ring_proj).toPandas()
     rect = rectified_zone_rings(zones_pdf)
     if res is None:
         widths = np.asarray(
@@ -903,13 +902,15 @@ def join_partition_metrics(
     n_buckets: int = 16,
     **join_kwargs,
 ) -> DataFrame:
-    """Per-partition lineage metrics of the flagship PIP join — the row
-    shape the checkpoint table records per bucket (streaming/checkpoint.py:
-    run_stage commits exactly these counts), computed as a queryable table:
-    (partition_id, input_docs, input_points, output_rows) with
-    ``partition_id = first-32-md5-bits(doc_id) mod n_buckets`` — the repo's
-    engine/oracle-shared deterministic bucket draw (curation.pack_sequences
-    uses the same), so a resumed run re-derives identical bucket identity.
+    """Per-partition lineage metrics of the flagship PIP join as a
+    queryable table: (partition_id, input_docs, input_points, output_rows)
+    with ``partition_id = first-32-md5-bits(doc_id) mod n_buckets`` — the
+    repo's engine/oracle-shared deterministic bucket draw
+    (curation.pack_sequences uses the same), so a rerun re-derives identical
+    bucket identity. It is not the checkpoint table's lineage:
+    streaming/checkpoint.py:run_stage buckets by
+    ``pmod(xxhash64(doc_id), n_buckets)`` and counts input docs, while this
+    table buckets by md5 and counts docs with points and their points.
 
     100 TB shape: the join's own shuffles plus two map-side-combined
     groupBy(bucket) aggregations over streams already in hand; the final

@@ -53,6 +53,10 @@ def get_spark(app: str = "gdal_common_python_spark", cores: int | None = None,
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory())
         .config("spark.ui.enabled", "false")
+        # PySpark's per-call call-site capture costs py4j round trips on
+        # every F.* call (active session, conf read, origin set/clear); errors
+        # keep Spark's message and plan, only the Python file:line is lost
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # this sandbox kernel (firecracker-style) degrades badly under
         # concurrent GC threads: G1's background threads put the JVM at ~60%
         # system time and local[N>8] anti-scales. SerialGC + fewer JIT

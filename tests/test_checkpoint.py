@@ -2,14 +2,56 @@
 recomputation of completed partitions (SURVEY §5.2 item 3d)."""
 
 import os
+import time
+from contextlib import contextmanager
 
+import pytest
 from pyspark.sql import functions as F
 
+from gdal_common_python_spark.operators import spatial_join as sj
 from gdal_common_python_spark.streaming.checkpoint import CheckpointStore, run_stage
 
 
 def _transform(df):
     return df.withColumn("n_spans", F.size("spans")).select("doc_id", "n_spans")
+
+
+def _drop_odd(df):
+    return _transform(df).filter(F.col("n_spans") % 2 == 0)
+
+
+def _per_span(df):
+    return df.select("doc_id", F.posexplode("spans").alias("pos", "span")).select(
+        "doc_id", "pos", F.col("span.kind").alias("kind")
+    )
+
+
+def _recount(df, n_buckets):
+    """{bucket: rows}, an exact groupBy over the run's bucket key."""
+    b = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int").alias("b")
+    return {r.b: r["count"] for r in df.groupBy(b).count().collect()}
+
+
+def _assert_lineage(lineage, inp, out, n_buckets):
+    """Each committed bucket's counts equal an exact recount of the input and
+    of the transform's output."""
+    rin, rout = _recount(inp, n_buckets), _recount(out, n_buckets)
+    for r in lineage.itertuples():
+        assert r.input_rows == rin.get(r.partition_id, 0), r
+        assert r.output_rows == rout.get(r.partition_id, 0), r
+
+
+@contextmanager
+def _jobs(spark, group):
+    """Collects the ids of the Spark jobs run inside the block."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    ids = []
+    try:
+        yield ids
+    finally:
+        sc._jsc.clearJobGroup()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_partial_then_resume(spark, docs, tmp_path):
@@ -45,9 +87,10 @@ def test_partial_then_resume(spark, docs, tmp_path):
     second = lineage2.set_index("partition_id")["written_at"]
     for b in first.index:
         assert second[b] == first[b]
-    # lineage counts reconcile with the data
+    # lineage counts reconcile with the data, bucket by bucket
     assert int(lineage2.input_rows.sum()) == docs.count()
     assert int(lineage2.output_rows.sum()) == len(expected)
+    _assert_lineage(lineage2, docs, _transform(docs), 16)
 
     # idempotent: a third invocation processes nothing new
     again = run_stage(
@@ -77,8 +120,6 @@ def test_mid_join_resume(spark, docs, zones, tmp_path):
     join (bucket-local per doc_id — the zone side broadcasts), so a run
     killed mid-join resumes without recomputing completed buckets and
     reproduces the stateless join exactly."""
-    from gdal_common_python_spark.operators import spatial_join as sj
-
     base = str(tmp_path / "ckpt_join")
     store = CheckpointStore(base)
 
@@ -110,3 +151,75 @@ def test_mid_join_resume(spark, docs, zones, tmp_path):
         assert second[b] == first[b]  # completed buckets never recomputed
     assert int(lineage2.input_rows.sum()) == docs.count()
     assert int(lineage2.output_rows.sum()) == len(expected)
+    _assert_lineage(lineage2, docs, join_t(docs), 8)
+
+
+@pytest.mark.parametrize("transform", [_drop_odd, _per_span], ids=["drop", "per_span"])
+def test_lineage_matches_recount(spark, docs, tmp_path, transform):
+    """Per-bucket input/output rows equal an exact recount for a transform
+    that drops rows and one that emits several rows per doc, after a partial
+    run and after its resume."""
+    name = transform.__name__
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    run_stage(spark, store, "r", name, docs, "doc_id", transform, n_buckets=8, max_buckets=3)
+    lineage = store.committed("r", name)
+    assert len(lineage) == 3
+    _assert_lineage(lineage, docs, transform(docs), 8)
+    run_stage(spark, store, "r", name, docs, "doc_id", transform, n_buckets=8)
+    lineage = store.committed("r", name)
+    assert sorted(lineage.partition_id) == list(range(8))
+    _assert_lineage(lineage, docs, transform(docs), 8)
+
+
+def test_one_job_per_call(spark, docs, tmp_path):
+    """A call that processes buckets runs exactly one Spark job (the write):
+    its lineage is observed on that write and the returned frame is read
+    with the written schema, so neither counts nor schema inference add a
+    job. Each bucket's wall_ms is the wall of the call that processed it."""
+    store = CheckpointStore(str(tmp_path / "ckpt_jobs"))
+    for i, max_buckets in enumerate((5, None)):
+        t = time.monotonic()
+        with _jobs(spark, f"ckpt-jobs-{i}") as ids:
+            run_stage(spark, store, "r", "s", docs, "doc_id", _transform,
+                      n_buckets=16, max_buckets=max_buckets)
+        call_ms = (time.monotonic() - t) * 1000.0
+        assert len(ids) == 1, f"call {i} ran {len(ids)} Spark jobs"
+        newest = store.committed("r", "s")
+        newest = newest[newest.written_at == newest.written_at.max()]
+        assert newest.wall_ms.nunique() == 1
+        assert call_ms / 2 < newest.wall_ms.iloc[0] <= call_ms
+
+
+def test_commit_crash_resumes(spark, docs, tmp_path, monkeypatch):
+    """A crash between the data write and the manifest commit: the next call
+    wipes and reruns those buckets, and the result equals an uninterrupted
+    run row for row (no duplicates) with exact lineage."""
+    cols = ["doc_id", "pos", "kind"]
+    whole = run_stage(
+        spark, CheckpointStore(str(tmp_path / "whole")), "r", "s", docs, "doc_id",
+        _per_span, n_buckets=8,
+    )
+    expected = sorted(tuple(r) for r in whole.select(*cols).collect())
+
+    store = CheckpointStore(str(tmp_path / "crash"))
+    commit = CheckpointStore.commit
+    calls = []
+
+    def commit_once_fails(self, rows):
+        calls.append(rows)
+        if len(calls) == 1:
+            raise OSError("injected crash before the manifest commit")
+        return commit(self, rows)
+
+    monkeypatch.setattr(CheckpointStore, "commit", commit_once_fails)
+    with pytest.raises(OSError, match="injected crash"):
+        run_stage(spark, store, "r", "s", docs, "doc_id", _per_span, n_buckets=8, max_buckets=3)
+    assert store.committed("r", "s").empty
+    assert os.listdir(os.path.join(str(tmp_path / "crash"), "s", "data"))  # data was written
+
+    out = run_stage(spark, store, "r", "s", docs, "doc_id", _per_span, n_buckets=8)
+    assert [r["partition_id"] for r in calls[1]] == list(range(8))  # crashed buckets rerun
+    assert sorted(tuple(r) for r in out.select(*cols).collect()) == expected
+    lineage = store.committed("r", "s")
+    assert sorted(lineage.partition_id) == list(range(8))
+    _assert_lineage(lineage, docs, _per_span(docs), 8)
